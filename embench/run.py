@@ -1,6 +1,6 @@
 """YAML-project benchmark for earthmover_spark.
 
-    python3 embench/run.py --workload bulk_render --seed 1 --seconds 10 --trace 0
+    python3 embench/run.py --workload bulk_render --seed 1 --seconds 3 --trace 0
 
 Run from the root of a checkout. The workload's inputs, project and
 oracle are generated from ``--seed`` into ``.embench_work/``. Then:
@@ -20,6 +20,7 @@ stdout is one JSON object: ``correct``, ``attempted``, ``failed`` and
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
@@ -113,14 +114,56 @@ def _child_env(work: str) -> dict:
     return env
 
 
+def _become_subreaper() -> None:
+    """Have the processes that the workers leave behind (the Spark JVM,
+    PySpark's Python daemon, which runs in a process group of its own)
+    re-parented to this process when their parent dies, so that
+    ``_reap`` can stop them and collect them as soon as they have ended
+    instead of leaving that to the init process."""
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        libc.prctl(36, 1, 0, 0, 0)  # PR_SET_CHILD_SUBREAPER
+    except (OSError, AttributeError):
+        pass
+
+
+def _children() -> list[int]:
+    me = os.getpid()
+    found = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+        if ppid == me:
+            found.append(int(pid))
+    return found
+
+
 def _reap(pgid: int) -> None:
-    """Wait until every process of a killed group has ended."""
+    """Wait until every process of a killed group has ended, killing
+    every process re-parented to this one on the way."""
     while True:
         try:
+            while os.waitpid(-1, os.WNOHANG)[0] > 0:
+                pass
+            children = True
+        except ChildProcessError:
+            children = False
+        try:
             os.killpg(pgid, 0)
+            group = True
         except ProcessLookupError:
+            group = False
+        if not (children or group):
             return
-        time.sleep(0.05)
+        for pid in _children():
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.01)
 
 
 def spawn(spec: dict, work: str, name: str, deadline: float) -> float:
@@ -174,6 +217,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     # a terminated benchmark still stops its processes and removes its files
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    _become_subreaper()
 
     if not os.path.isfile(os.path.join(ROOT, "earthmover_spark", "plans", "executor.py")):
         print(f"earthmover_spark not found under {ROOT}", file=sys.stderr)

@@ -180,8 +180,6 @@ def measure(spark, spec: dict) -> None:
     runner = Runner(spark, spec, tracer)
     cold, _, _ = runner.run_once(traced=bool(tracer))
     print(f"cold run: {cold:.3f} s", file=sys.stderr)
-    for _ in range(spec["warmup_runs"]):  # checked, not timed
-        runner.run_once()
     warm: list[float] = []
     traced_warm: list[tuple[int, float, dict]] = []
     timed: list[float] = []  # every warm run, traced or not

@@ -26,8 +26,8 @@ import os
 import re
 
 #: full-size row counts; tests pass a smaller ``scale``
-BULK_ROWS = 250_000
-UDF_ROWS = 100_000
+BULK_ROWS = 100_000
+UDF_ROWS = 10_000
 
 
 def _linearize(template: str) -> str:
@@ -274,7 +274,6 @@ def build_bulk_render(seed: int, work: str, scale: float = 1.0) -> dict:
         "config": os.path.join(work, "earthmover.yaml"),
         "input_rows": len(rows),
         "state_file": True,
-        "warmup_runs": 0,
         "expected": {
             "attendance.jsonl": {
                 "kind": "lines", "digest": lines_digest(lines), "rows": len(lines),
@@ -386,9 +385,6 @@ def build_udf_render(seed: int, work: str, scale: float = 1.0) -> dict:
         "config": os.path.join(work, "earthmover.yaml"),
         "input_rows": len(rows),
         "state_file": True,
-        # the Python workers and the JVM keep speeding up over the first
-        # runs after the cold one; time the runs after that
-        "warmup_runs": 2,
         "expected": {
             "attendance.jsonl": {
                 "kind": "lines", "digest": lines_digest(lines), "rows": len(lines),
