@@ -519,9 +519,10 @@ def _input_sql(col: Column) -> str:
     to the Column-composed path."""
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:  # pragma: no cover - call sites run inside a session
-        raise AttributeError("no active session")
+    # active() falls back to the default session: a thread other than
+    # the one that built the session (a concurrent destination write)
+    # has no active session of its own
+    spark = SparkSession.active()
     sql = spark._jsparkSession.expression(col._jc).sql()
     if "lambdafunction" in sql or _INPUT_SLOT in sql:
         # a HOF input doesn't round-trip through .sql(); decline

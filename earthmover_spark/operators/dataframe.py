@@ -172,9 +172,14 @@ def pivot(
     total-vs-unique-count error message. Spark pivots on a multi-column
     groupBy natively, so no composite-key workaround is needed. The
     ``F.first`` agg mirrors the reference's redundant ``aggfunc='first'``.
-    Passing ``distinct_values`` (the expected output column names) skips
-    Spark's extra distinct-scan job over ``cols_by`` — worthwhile when
-    the input is 100 TB and the pivot columns are known."""
+
+    The uniqueness check and the output columns come from one driver
+    action: each ``cols_by`` value with the largest row count of its
+    (rows_by, cols_by) combinations, in Spark's own pivot order
+    (ascending, NULL first) behind any duplicated value. Spark's own
+    distinct-value scan then runs only to raise its
+    ``spark.sql.pivotMaxValues`` error. Passing ``distinct_values`` (the
+    expected output column names) fixes the columns instead."""
     rows = ensure_list(rows_by)
     required = set(rows) | {cols_by, values}
     missing = required - set(df.columns)
@@ -182,8 +187,15 @@ def pivot(
         raise EarthmoverSparkError(f"pivot: columns not in dataset: {missing}")
 
     key_cols = rows + [cols_by]
-    counts = df.groupBy(*key_cols).count().filter(F.col("count") > 1)
-    if counts.limit(1).count() > 0:
+    max_values = int(df.sparkSession.conf.get("spark.sql.pivotMaxValues"))
+    per_value = (
+        df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__em_n"))
+        .groupBy(cols_by).agg(F.max("__em_n").alias("__em_n"))
+        .orderBy((F.col("__em_n") > 1).desc(), F.col(cols_by).asc())
+        .limit(max_values + 1)
+        .collect()
+    )
+    if per_value and per_value[0]["__em_n"] > 1:
         total = df.count()
         uniq = df.select(*key_cols).distinct().count()
         raise EarthmoverSparkError(
@@ -191,12 +203,14 @@ def pivot(
             f"Found {total} rows but only {uniq} unique combinations. "
             "Consider using group_by to aggregate the data instead."
         )
+    if distinct_values:
+        pivot_values = list(distinct_values)
+    elif len(per_value) > max_values:
+        pivot_values = None  # Spark's own scan raises its error
+    else:
+        pivot_values = [r[0] for r in per_value]
     grouped = df.groupBy(*rows) if rows else df.groupBy()
-    pivoted = (
-        grouped.pivot(cols_by, list(distinct_values))
-        if distinct_values
-        else grouped.pivot(cols_by)
-    )
+    pivoted = grouped.pivot(cols_by, pivot_values)
     return pivoted.agg(F.first(values))
 
 

@@ -3,16 +3,27 @@
 
 Improvements over the reference noted in SURVEY.md §4:
 - a node feeding multiple downstream consumers is ``.persist()``ed
-  (the reference recomputes it per destination);
-- everything stays lazy until a destination writes.
+  (the reference recomputes it per destination), and released when the
+  run ends, so a later run in the same session reads its inputs afresh;
+- everything stays lazy until a destination writes;
+- destinations are written concurrently: each write goes to a thread
+  pool the moment its source frame is built, while the main thread
+  builds the rest of the DAG (the reference runs one node at a time).
+  Each write runs in its own Spark job group. The first failure, of a
+  build or a write, cancels the other writes' job groups, waits for
+  every thread and raises an error that names the node.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import time
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from earthmover_spark.destinations import write_destination
 from earthmover_spark.functions.jinja_compute import template_column
@@ -28,6 +39,19 @@ from pyspark.sql import functions as F
 _META_KEYS = {"operation", "repartition", "sources", "source"}
 
 
+def _node_error(name: str, exc: BaseException) -> EarthmoverSparkError:
+    """``exc`` as an engine error whose message starts with the node."""
+    msg = str(exc)
+    return EarthmoverSparkError(msg if msg.startswith(name) else f"{name}: {msg}")
+
+
+def _raise_failed(writes: dict[str, Future]) -> None:
+    """Raise the error of the first destination write that failed."""
+    for dest, fut in writes.items():
+        if fut.done() and not fut.cancelled() and fut.exception() is not None:
+            raise _node_error(dest, fut.exception()) from fut.exception()
+
+
 class Executor:
     def __init__(self, spark: SparkSession, project: ProjectConfig):
         self.spark = spark
@@ -35,6 +59,8 @@ class Executor:
         self.graph = Graph(project)
         self.data: dict[str, DataFrame] = {}
         self.results: dict[str, str] = {}
+        #: frames this executor persisted; released when ``run`` ends
+        self._persisted: list[DataFrame] = []
 
     # -- node evaluation ----------------------------------------------------
 
@@ -219,6 +245,26 @@ class Executor:
 
     # -- run ----------------------------------------------------------------
 
+    def _build(self, name: str, cfg: dict, fan_out: bool) -> DataFrame:
+        """One source or transformation frame, checked; a frame with
+        more than one consumer is persisted until the end of the run."""
+        if self.graph.nodes[name].kind == "sources":
+            df = self._eval_source(name, cfg)
+        else:
+            df = self._eval_transformation(name, cfg)
+        if df.isStreaming:
+            return df
+        self._check_expectations(name, cfg, df)
+        if cfg.get("debug"):
+            print(f"-- {name}: {len(df.columns)} columns {df.columns}")
+            df.show(5, truncate=False)
+        if cfg.get("repartition"):
+            df = df.repartition(int(cfg["repartition"]))
+        if fan_out:
+            df = df.persist()
+            self._persisted.append(df)
+        return df
+
     def run(
         self,
         selector: str = "*",
@@ -226,59 +272,68 @@ class Executor:
         results_file: str | None = None,
         show_graph: bool = False,
     ) -> dict[str, str]:
-        import json
-        import time
-
         subset = self.graph.select(selector)
         order = self.graph.topological_order(subset)
         consumers = self.graph.consumer_counts(subset)
         out_dir = output_dir or os.path.join(
             self.project.base_dir, self.project.output_dir
         )
-
+        # destinations by the frame they write; each one is submitted
+        # the moment that frame is built
+        waiting: dict[str, list[str]] = {}
+        for name in order:
+            node = self.graph.nodes[name]
+            if node.kind == "destinations":
+                waiting.setdefault(node.config["source"], []).append(name)
+        n_dest = sum(map(len, waiting.values()))
+        pool = ThreadPoolExecutor(
+            max(1, min(n_dest, self.spark.sparkContext.defaultParallelism)),
+            thread_name_prefix="earthmover-destination",
+        )
+        writes: dict[str, Future] = {}
         node_stats: dict[str, dict] = {}
         t_start = time.time()
-        for name in order:
-            t0 = time.time()
-            node = self.graph.nodes[name]
-            if node.kind == "sources":
-                df = self._eval_source(name, node.config)
-            elif node.kind == "transformations":
-                df = self._eval_transformation(name, node.config)
-            else:
-                self._write_destination(name, node.config, out_dir)
-                node_stats[name] = {"seconds": round(time.time() - t0, 3)}
-                if self._show_progress(node.config):
-                    print(f"-- {name}: written in {node_stats[name]['seconds']}s")
-                continue
-            if not df.isStreaming:
-                self._check_expectations(name, node.config, df)
-                if node.config.get("debug"):
-                    print(f"-- {name}: {len(df.columns)} columns {df.columns}")
-                    df.show(5, truncate=False)
-                if node.config.get("repartition"):
-                    df = df.repartition(int(node.config["repartition"]))
-                if consumers.get(name, 0) > 1:
-                    df = df.persist()
-            self.data[name] = df
-            node_stats[name] = {"seconds": round(time.time() - t0, 3)}
-
-        if results_file:
-            # row counts force one count per node — opt-in, like the
-            # reference's --results-file (earthmover.py:409-419)
-            for name, df in self.data.items():
-                if name in node_stats and not df.isStreaming:
-                    node_stats[name]["rows"] = df.count()
-            with open(results_file, "w") as fh:
-                json.dump(
-                    {
-                        "total_seconds": round(time.time() - t_start, 3),
-                        "nodes": node_stats,
-                        "destinations": self.results,
-                    },
-                    fh,
-                    indent=2,
-                )
+        try:
+            try:
+                for name in order:
+                    node = self.graph.nodes[name]
+                    if node.kind == "destinations":
+                        continue
+                    _raise_failed(writes)
+                    t0 = time.time()
+                    try:
+                        df = self._build(
+                            name, node.config, consumers.get(name, 0) > 1
+                        )
+                    except Exception as exc:
+                        raise _node_error(name, exc) from exc
+                    self.data[name] = df
+                    node_stats[name] = {"seconds": round(time.time() - t0, 3)}
+                    for dest in waiting.get(name, ()):
+                        writes[dest] = pool.submit(
+                            inheritable_thread_target(self.spark)(
+                                self._write_destination
+                            ),
+                            dest, self.graph.nodes[dest].config, df, out_dir,
+                        )
+                wait(writes.values(), return_when=FIRST_EXCEPTION)
+                _raise_failed(writes)
+            except BaseException:
+                self._cancel_writes(writes)
+                raise
+            finally:
+                pool.shutdown(wait=True)
+            for name in order:
+                if name in writes:
+                    self.results[name], seconds = writes[name].result()
+                    node_stats[name] = {"seconds": seconds}
+            node_stats = {name: node_stats[name] for name in order}
+            if results_file:
+                self._write_results(results_file, node_stats, t_start)
+        finally:
+            for df in self._persisted:
+                df.unpersist()
+            self._persisted.clear()
         if show_graph:
             # DOT DAG next to the outputs (reference -g/--show-graph,
             # earthmover/__main__.py:94); row counts included when a
@@ -297,6 +352,37 @@ class Executor:
             if png:
                 self.results["__graph_png__"] = png
         return self.results
+
+    def _cancel_writes(self, writes: dict[str, Future]) -> None:
+        """Drop queued writes and cancel the job groups of running ones
+        until every write has ended (a write may start its next job
+        after its group was cancelled, so cancelling repeats)."""
+        for fut in writes.values():
+            fut.cancel()
+        sc = self.spark.sparkContext
+        while running := {d: f for d, f in writes.items() if not f.done()}:
+            for dest in running:
+                sc.cancelJobGroup(dest)
+            wait(running.values(), timeout=0.5)
+
+    def _write_results(
+        self, results_file: str, node_stats: dict[str, dict], t_start: float
+    ) -> None:
+        # row counts force one count per node — opt-in, like the
+        # reference's --results-file (earthmover.py:409-419)
+        for name, df in self.data.items():
+            if name in node_stats and not df.isStreaming:
+                node_stats[name]["rows"] = df.count()
+        with open(results_file, "w") as fh:
+            json.dump(
+                {
+                    "total_seconds": round(time.time() - t_start, 3),
+                    "nodes": node_stats,
+                    "destinations": self.results,
+                },
+                fh,
+                indent=2,
+            )
 
     def _write_streaming(
         self, name: str, cfg: dict, df: DataFrame, out_dir: str
@@ -361,32 +447,46 @@ class Executor:
     def _show_progress(self, cfg: dict) -> bool:
         """Node-level ``show_progress`` with a config-level default —
         reference node.py:59 (ProgressBar per node). The Spark mapping
-        is job-group tagging (every node's stages are attributed to it
-        in the Spark UI) plus an opt-in per-node timing line here."""
+        is job-group tagging (every destination's jobs are attributed to
+        it in the Spark UI) plus an opt-in per-destination timing line,
+        printed when the write ends. Writes run concurrently, so these
+        are overlapping wall times: they need not add up to the run's
+        total, and the lines come in completion order."""
         return bool(
             cfg.get("show_progress", self.project.config.get("show_progress"))
         )
 
-    def _write_destination(self, name: str, cfg: dict, out_dir: str) -> None:
+    def _write_destination(
+        self, name: str, cfg: dict, df: DataFrame, out_dir: str
+    ) -> tuple[str, float]:
+        """Write one destination on a pool thread; returns its path and
+        wall seconds."""
+        t0 = time.time()
         # Attribute all jobs this destination triggers to the node name
         # (Spark UI: job group = node), the engine's ProgressBar analog.
+        # Local properties are per thread (pinned-thread mode), so
+        # concurrent writes keep their own groups.
         sc = self.spark.sparkContext
         sc.setJobGroup(name, f"earthmover_spark destination {name}")
         try:
-            self._write_destination_inner(name, cfg, out_dir)
+            path = self._write_destination_inner(name, cfg, df, out_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        seconds = round(time.time() - t0, 3)
+        if self._show_progress(cfg):
+            print(f"-- {name}: written in {seconds}s")
+        return path, seconds
 
-    def _write_destination_inner(self, name: str, cfg: dict, out_dir: str) -> None:
-        df = self._resolve(cfg["source"])
+    def _write_destination_inner(
+        self, name: str, cfg: dict, df: DataFrame, out_dir: str
+    ) -> str:
         if df.isStreaming:
-            self.results[name] = self._write_streaming(name, cfg, df, out_dir)
-            return
+            return self._write_streaming(name, cfg, df, out_dir)
         if cfg.get("format") in ("parquet", "orc", "csv"):
             from earthmover_spark.destinations.file_destination import write_columnar
 
-            self.results[name] = write_columnar(
+            return write_columnar(
                 df,
                 name.split(".", 1)[1],
                 out_dir,
@@ -395,12 +495,11 @@ class Executor:
                 compression=cfg.get("compression"),
                 target_file_mb=cfg.get("target_file_mb"),
             )
-            return
         template_file = cfg.get("template")
         if template_file and not os.path.isabs(template_file):
             template_file = os.path.join(self.project.base_dir, template_file)
         short = name.split(".", 1)[1]
-        path = write_destination(
+        return write_destination(
             df,
             short,
             out_dir,
@@ -413,7 +512,6 @@ class Executor:
             footer=cfg.get("footer"),
             mode=cfg.get("mode", "file"),
         )
-        self.results[name] = path
 
 
 def explain_project(

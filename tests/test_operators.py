@@ -194,6 +194,21 @@ def test_pivot_uniqueness_error_message(spark):
         D.pivot(df, rows_by="rk", cols_by="ck", values="v")
 
 
+@pytest.mark.parametrize("ck_type", ["string", "int"])
+def test_pivot_columns_match_spark_pivot(spark, ck_type):
+    """The operator computes the pivot values itself; the columns, their
+    order (ascending, NULL first) and the values must be Spark's own."""
+    df = spark.createDataFrame(
+        [("r1", "20", "1"), ("r1", None, "2"), ("r2", "3", "3"), ("r2", "20", "4")],
+        "rk string, ck string, v string",
+    ).withColumn("ck", F.col("ck").cast(ck_type))
+    got = D.pivot(df, rows_by="rk", cols_by="ck", values="v")
+    want = df.groupBy("rk").pivot("ck").agg(F.first("v"))
+    assert got.columns == want.columns
+    assert got.columns[:2] == ["rk", "null"]
+    assert {r.rk: r for r in got.collect()} == {r.rk: r for r in want.collect()}
+
+
 def test_melt_defaults(spark):
     df = spark.createDataFrame([(1, "a", "b")], ["id", "x", "y"])
     out = D.melt(df, id_vars=["id"])
